@@ -218,7 +218,7 @@ object Kernels {
 
   /** Loss only. */
   def loss(data: GlmData, beta: DenseVector[Double], family: Family): Double =
-    lossMulti(data, Array(beta), family)(0)
+    lossGrad(data, beta, family)._1
 
   /** Fused Hessian + gradient in one pass (the reference's
     * `da.compute(hess, grad)` shared traversal, algorithms.py:205).
@@ -290,54 +290,90 @@ object Kernels {
     (DenseVector(g), H)
   }
 
-  /** Line-search ladder: losses at β − s_k·dir for every candidate step in
-    * ONE pass (per row: t = x·β and u = x·dir once, then K cheap updates).
-    * Strictly fewer jobs than the reference's sequential probes
-    * (algorithms.py:63-86) while visiting the identical candidate ladder. */
+  /** Line-search ladder: losses AND gradients at β − s_k·dir for every
+    * candidate step in ONE pass (per row: t = x·β and u = x·dir once, then
+    * K cheap updates on the margin t − s_k·u). Strictly fewer jobs than the
+    * reference's sequential probes (algorithms.py:63-86) while visiting the
+    * identical candidate ladder; the gradients let gradient descent carry
+    * the accepted candidate's gradient into its next iteration instead of
+    * re-scanning for it.
+    *
+    * The gradient is taken at the ladder margin, not at a recomputed
+    * x·(β − s·dir): the reference's own incremental arithmetic
+    * (`Xbeta ← Xbeta − s·Xstep`, SURVEY §O3), equal to the exact-margin
+    * gradient up to rounding. Partials carry K·(p+1) doubles, so callers
+    * keep K small (gradient descent passes at most 10 candidates). */
   def lossLadder(
       data: GlmData,
       beta: DenseVector[Double],
       dir: DenseVector[Double],
       steps: Array[Double],
-      family: Family): Array[Double] = {
+      family: Family): (Array[Double], Array[DenseVector[Double]]) = {
     val b = beta.toArray
     val d = dir.toArray
     val ss = steps
     val fam = family
-    partitionAggregate(data)(() => new Array[Double](ss.length))(
+    val p = data.numFeatures
+    val (losses, grads) = partitionAggregate(data)(
+      () => (new Array[Double](ss.length), Array.fill(ss.length)(new Array[Double](p))))(
       { (acc, x, y) =>
         val t = dot(x, b)
         val u = dot(x, d)
         var k = 0
-        while (k < ss.length) { acc(k) += fam.loss(t - ss(k) * u, y); k += 1 }
+        while (k < ss.length) {
+          val m = t - ss(k) * u
+          acc._1(k) += fam.loss(m, y)
+          axpy(fam.dLoss(m, y), x, acc._2(k))
+          k += 1
+        }
         acc
       },
-      { (a1, a2) =>
-        var k = 0
-        while (k < a1.length) { a1(k) += a2(k); k += 1 }
-        a1
-      })
+      addCandidates)
+    (losses, grads.map(DenseVector(_)))
   }
 
-  /** Losses at arbitrary candidate βs in ONE pass (proximal-grad probes,
-    * where each candidate is a nonlinear prox image of β). */
+  /** Losses AND gradients at arbitrary candidate βs in ONE pass
+    * (proximal-grad probes, where each candidate is a nonlinear prox image
+    * of β). Each candidate's (loss, gradient) is bit-identical to
+    * [[lossGrad]] at that candidate: the same exact x·β_k, the same per-row
+    * accumulation and the same partition-ordered combine. */
   def lossMulti(
       data: GlmData,
       betas: Array[DenseVector[Double]],
-      family: Family): Array[Double] = {
+      family: Family): (Array[Double], Array[DenseVector[Double]]) = {
     val bs = betas.map(_.toArray)
     val fam = family
-    partitionAggregate(data)(() => new Array[Double](bs.length))(
+    val p = data.numFeatures
+    val (losses, grads) = partitionAggregate(data)(
+      () => (new Array[Double](bs.length), Array.fill(bs.length)(new Array[Double](p))))(
       { (acc, x, y) =>
         var k = 0
-        while (k < bs.length) { acc(k) += fam.loss(dot(x, bs(k)), y); k += 1 }
+        while (k < bs.length) {
+          val xb = dot(x, bs(k))
+          acc._1(k) += fam.loss(xb, y)
+          axpy(fam.dLoss(xb, y), x, acc._2(k))
+          k += 1
+        }
         acc
       },
-      { (a1, a2) =>
-        var k = 0
-        while (k < a1.length) { a1(k) += a2(k); k += 1 }
-        a1
-      })
+      addCandidates)
+    (losses, grads.map(DenseVector(_)))
+  }
+
+  /** Combine for per-candidate (losses, gradients) partials, in place. */
+  private def addCandidates(
+      a: (Array[Double], Array[Array[Double]]),
+      b: (Array[Double], Array[Array[Double]])): (Array[Double], Array[Array[Double]]) = {
+    var k = 0
+    while (k < a._1.length) {
+      a._1(k) += b._1(k)
+      val g1 = a._2(k)
+      val g2 = b._2(k)
+      var i = 0
+      while (i < g1.length) { g1(i) += g2(i); i += 1 }
+      k += 1
+    }
+    a
   }
 
   /** Column mean/std in one pass — the A4 stats kernel behind

@@ -255,10 +255,13 @@ object Dedup {
     * string. Wider bands keep the string form (31·rowsPerBand bits no
     * longer fit a long). The short-doc sentinel signature (all
     * components Long.MaxValue; reaches this only on the STREAMING path
-    * — batch [[banded]] filters sentinel rows) packs to -1 (MaxValue <<
-    * 31 has its low 31 bits clear, so the OR is all-ones); real keys
-    * are non-negative, so a sentinel can never collide with a reference
-    * key and short stream docs still pass every anti-join as clean.
+    * — batch [[banded]] filters sentinel rows) keys to Long.MaxValue in
+    * a 1-component band (the component itself; real components are
+    * ≤ 2³¹−2) and packs to -1 in a 2-component band (MaxValue << 31
+    * has its low 31 bits clear, so the OR is all-ones; real packed keys
+    * are non-negative). Either way a sentinel can never collide with a
+    * reference key, and short stream docs still pass every anti-join as
+    * clean.
     *
     * ONE definition shared by the batch banding — and therefore by
     * [[writeBandedSignatures]]'s on-disk `bucket` column — and the
@@ -1268,7 +1271,8 @@ object Dedup {
       // cells, norm) projection, and let every consumer read it:
       // element_at(cells, 1) IS the primary cell (ivfCells shares
       // ivfCell's round-before-argmin and lowest-cell-id tie rules —
-      // HierIvfSpec pins the identity), so the pair set is
+      // an IndexExpressionsSpec property pins the identity over random
+      // vectors, ties included), so the pair set is
       // bit-identical to the re-derived form. The norm rides along so
       // the fan side no longer recomputes it per exploded probe row.
       val base = emb.select(col(idCol).as("__id"), vec.as("__v"),

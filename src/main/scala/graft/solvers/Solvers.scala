@@ -10,8 +10,11 @@ import graft.regularizers.Regularizer
 /** The five reference solvers (algorithms.py:89-514) as driver-orchestrated
   * loops over single-pass kernels. Control flow is a faithful port of the
   * reference's loop structure; the distributed plan per iteration is the
-  * same or strictly fewer jobs (line-search probes are batched into one
-  * ladder pass instead of one job per probe).
+  * same or strictly fewer jobs. Line-search probes are batched into ladder
+  * passes instead of one job per probe, and gradient descent and proximal
+  * gradient take the next iteration's gradient from the pass that accepted
+  * the step, so they run ONE Spark job per iteration in the common case
+  * (candidate 0 or 1 accepted) instead of a gradient pass plus a probe pass.
   */
 object Solvers {
 
@@ -61,10 +64,30 @@ object Solvers {
 
   // ---------------------------------------------------------------- GD
 
+  /** Candidates in an iteration's first probe pass. Growth ×1.25 after a
+    * success and backtrack ×0.5 make candidate 0 or 1 the usual accept, so
+    * the rest of the first 10-chunk runs in a second pass only when both
+    * are rejected; later chunks run whole. */
+  private val FirstPass = 2
+
+  /** Pass bounds [lo, hi) over the first `n` candidates of the ladder
+    * chunk that starts at candidate `ii`; no pass when `n` is 0. */
+  private def probePasses(ii: Int, n: Int): Iterator[(Int, Int)] =
+    if (n == 0) Iterator.empty
+    else if (ii == 0 && n > FirstPass) Iterator((0, FirstPass), (FirstPass, n))
+    else Iterator.single((0, n))
+
   /** Full-batch gradient descent with Armijo backtracking line search
     * (algorithms.py:27-167). The candidate step ladder
     * s_i = stepSize·backtrackMult^i is evaluated in batched single-pass
-    * chunks; acceptance order is identical to the sequential reference. */
+    * chunks of 10, the first chunk split after candidate 1
+    * ([[probePasses]]); acceptance order is identical to the sequential
+    * reference. Each ladder pass also returns the candidates' gradients,
+    * taken at the ladder margin x·β − s·x·dir (the reference's incremental
+    * `Xbeta`, SURVEY §O3), and the accepted candidate's (loss, gradient)
+    * seeds the next iteration: ONE Spark job per iteration in the common
+    * case, with a fused [[Kernels.lossGrad]] pass only on the first
+    * iteration or after a ladder that accepted nothing. */
   def gradientDescent(
       data: GlmData,
       maxIter: Int = 100,
@@ -80,12 +103,16 @@ object Solvers {
       var beta = DenseVector.zeros[Double](p)
       var func = 0.0
       var haveFunc = false
+      var carried: (Double, DenseVector[Double]) = null
 
       var k = 0
       var done = false
       while (k < maxIter && !done) {
-        // fused loss+grad pass; the loss refreshes func on recalc iterations
-        val (freshFunc, grad) = Kernels.lossGrad(d, beta, family)
+        // the accepted ladder candidate's (loss, gradient), else one fused
+        // loss+grad pass; the loss refreshes func on recalc iterations
+        val (freshFunc, grad) =
+          if (carried != null) carried else Kernels.lossGrad(d, beta, family)
+        carried = null
         if (k % 10 == 0 || !haveFunc) { func = freshFunc; haveFunc = true }
 
         val lf = func
@@ -113,17 +140,21 @@ object Solvers {
             j += 1
           }
           val evalN = if (stop >= 0) stop else chunk
-          if (evalN > 0) {
-            val losses = Kernels.lossLadder(d, obeta, grad, steps.take(evalN), family)
-            var jj = 0
-            while (jj < evalN && !accepted) {
-              lastFunc = losses(jj)
+          val passes = probePasses(ii, evalN)
+          while (passes.hasNext && !accepted) {
+            val (lo, hi) = passes.next()
+            val (losses, grads) =
+              Kernels.lossLadder(d, obeta, grad, steps.slice(lo, hi), family)
+            var jj = lo
+            while (jj < hi && !accepted) {
+              lastFunc = losses(jj - lo)
               val s = steps(jj)
-              val df = lf - losses(jj)
+              val df = lf - lastFunc
               if (df >= armijoMult * s * steplen) {
                 accepted = true
                 stepSize = s
-                func = losses(jj)
+                func = lastFunc
+                carried = (lastFunc, grads(jj - lo))
               }
               jj += 1
             }
@@ -239,7 +270,12 @@ object Solvers {
 
   /** ISTA with backtracking (algorithms.py:422-505). Each probe's candidate
     * β is a prox image, so probes ship candidate βs and evaluate their
-    * losses in batched single passes (lossMulti). */
+    * losses and gradients in batched single passes (lossMulti), 10-chunks
+    * with the first split after candidate 1 ([[probePasses]]). Every
+    * probed candidate becomes β in turn (the reference's loop), so the
+    * last probed candidate's (loss, gradient) — exact, bit-identical to a
+    * [[Kernels.lossGrad]] pass there — seeds the next iteration: ONE Spark
+    * job per iteration in the common case, lossGrad only on the first. */
   def proximalGrad(
       data: GlmData,
       regularizer: Regularizer = Regularizer.get("l1"),
@@ -256,11 +292,13 @@ object Solvers {
       var beta = DenseVector.zeros[Double](p)
       var func = 0.0
       var haveFunc = false
+      var carried: (Double, DenseVector[Double]) = null
 
       var k = 0
       var done = false
       while (k < maxIter && !done) {
-        val (freshFunc, gradient) = Kernels.lossGrad(d, beta, family)
+        val (freshFunc, gradient) =
+          if (carried != null) carried else Kernels.lossGrad(d, beta, family)
         if (k % 10 == 0 || !haveFunc) { func = freshFunc; haveFunc = true }
 
         val obeta = beta
@@ -273,14 +311,19 @@ object Solvers {
           val steps = Array.tabulate(chunk)(j => stepSize * math.pow(backtrackMult, j))
           val candidates = steps.map(s =>
             regularizer.proximalOperator(obeta - gradient * s, s * lamduh))
-          val losses = Kernels.lossMulti(d, candidates, family)
-          var j = 0
-          while (j < chunk && !accepted) {
-            beta = candidates(j)
-            func = losses(j)
-            df = lf - func
-            if (df > 0) { accepted = true; stepSize = steps(j) }
-            j += 1
+          val passes = probePasses(ii, chunk)
+          while (passes.hasNext && !accepted) {
+            val (lo, hi) = passes.next()
+            val (losses, grads) = Kernels.lossMulti(d, candidates.slice(lo, hi), family)
+            var j = lo
+            while (j < hi && !accepted) {
+              beta = candidates(j)
+              func = losses(j - lo)
+              carried = (func, grads(j - lo))
+              df = lf - func
+              if (df > 0) { accepted = true; stepSize = steps(j) }
+              j += 1
+            }
           }
           if (!accepted) stepSize *= math.pow(backtrackMult, chunk)
           ii += chunk

@@ -43,6 +43,35 @@ class IndexExpressionsSpec extends AnyFunSuite {
     assert(cells == Seq(1, 2, 0), s"expected (d,id)-ascending, got $cells")
   }
 
+  test("property: element_at(ivfCells(v, k, dp), 1) === ivfCell(v, dp), ties included") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import spark.implicits._
+    // coordinates on a coarse grid, centroids drawn from a small pool with
+    // repeats: equal distances (and duplicate cells) are frequent, so the
+    // lowest-id tie rule of both expressions is exercised
+    val coord = Gen.oneOf(-1.0, -0.5, 0.0, 0.5, 1.0, 0.25000001)
+    val gen = for {
+      d <- Gen.choose(1, 3)
+      k <- Gen.choose(1, 6)
+      pool <- Gen.listOfN(3, Gen.listOfN(d, coord))
+      cents <- Gen.listOfN(k, Gen.oneOf(pool))
+      nprobe <- Gen.choose(1, k)
+      dp <- Gen.oneOf(-1, 0, 2, 6)
+      vs <- Gen.listOfN(8, Gen.listOfN(d, Gen.oneOf(coord, Gen.choose(-1.5, 1.5))))
+    } yield (cents.map(_.toArray).toArray, nprobe, dp, vs)
+    val prop = Prop.forAll(gen) { case (cents, nprobe, dp, vs) =>
+      val b = bc(cents)
+      val rows = vs.toDF("v").select(
+          element_at(IndexExpr.ivfCells(col("v"), b, nprobe, dp), 1),
+          IndexExpr.ivfCell(col("v"), b, dp))
+        .collect()
+      Prop(rows.forall(r => r.getInt(0) == r.getInt(1))) :|
+        s"nprobe=$nprobe dp=$dp rows=${rows.toSeq}"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(30), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   test("rounding happens BEFORE the argmin (a sub-6dp gap cannot flip a cell)") {
     import spark.implicits._
     // cell 1 is closer by ~1e-9 (below 6dp resolution): with rounding the

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The physical-execution contract from SURVEY §4: jobs per solver
   * iteration must match (or beat) the reference's `compute` count —
-  * Newton = 1 fused pass/iter, ADMM = 1 mapPartitions pass/iter, kernels
-  * are single jobs. Counted with a SparkListener. */
+  * Newton = 1 fused pass/iter, ADMM = 1 mapPartitions pass/iter,
+  * gradient descent and proximal gradient = 1 ladder pass/iter in the
+  * common case, kernels are single jobs. Counted with a SparkListener. */
 class JobCountSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -41,6 +42,7 @@ class JobCountSpec extends AnyFunSuite {
     assert(countJobs(Kernels.colStats(data)) == 1)
     assert(countJobs(
       Kernels.lossLadder(data, b, b, Array(1.0, 0.5, 0.1), Logistic)) == 1)
+    assert(countJobs(Kernels.lossMulti(data, Array(b, b + 0.5), Logistic)) == 1)
     data.unpersist()
   }
 
@@ -56,6 +58,28 @@ class JobCountSpec extends AnyFunSuite {
     // `iter_count > max_iter` loop bound) + generous overhead allowance.
     assert(jobs <= iters + 1 + 4, s"jobs=$jobs")
     data.unpersist()
+  }
+
+  test("gradient_descent / proximal_grad: 1 ladder job per iteration") {
+    // the accepted candidate's (loss, gradient) comes back with the
+    // ladder pass that accepted it, so only the FIRST iteration pays a
+    // separate lossGrad pass. Overhead: 1 colStats (normalize) + 1
+    // lossGrad + 1 second probe pass in the first iteration, whose step
+    // 1.0 overshoots the sum loss. 8 iterations stay short of the optimum
+    // (there every probe is rejected and a line search runs all 100
+    // candidates).
+    val data = Datasets.makeInterceptData(spark, 500, 3).persist()
+    data.rows.count()
+    val iters = 8
+    val gd = countJobs {
+      Solvers.gradientDescent(data, maxIter = iters, tol = 0.0)
+    }
+    val pg = countJobs {
+      Solvers.proximalGrad(data, maxIter = iters, tol = 0.0)
+    }
+    data.unpersist()
+    assert(gd <= iters + 3, s"gradient_descent jobs=$gd for $iters iterations")
+    assert(pg <= iters + 3, s"proximal_grad jobs=$pg for $iters iterations")
   }
 
   test("admm: 1 local-solve job per iteration (+ normalize overhead)") {
@@ -129,24 +153,30 @@ class JobCountSpec extends AnyFunSuite {
     // locally while serializing the cluster. Run the identical fit at
     // 16x the rows and require the JOB COUNTS EQUAL, not just close.
     val iters = 4
-    def jobsAt(n: Int): (Int, Int) = {
+    def jobsAt(n: Int): Map[String, Int] = {
       val data = Datasets.makeInterceptData(spark, n, 3).persist()
       data.rows.count()
-      val newton = countJobs {
-        Solvers.newton(data, maxIter = iters, tol = 0.0)
-      }
-      val admm = countJobs {
-        Solvers.admm(data, maxIter = iters, lamduh = 0.1)
-      }
+      val jobs = Map(
+        "newton" -> countJobs {
+          Solvers.newton(data, maxIter = iters, tol = 0.0)
+        },
+        "admm" -> countJobs {
+          Solvers.admm(data, maxIter = iters, lamduh = 0.1)
+        },
+        "gradient_descent" -> countJobs {
+          Solvers.gradientDescent(data, maxIter = iters, tol = 0.0)
+        },
+        "proximal_grad" -> countJobs {
+          Solvers.proximalGrad(data, maxIter = iters, tol = 0.0)
+        })
       data.unpersist()
-      (newton, admm)
+      jobs
     }
-    val (newtonSmall, admmSmall) = jobsAt(500)
-    val (newtonBig, admmBig) = jobsAt(8000)
-    assert(newtonSmall == newtonBig,
-      s"newton jobs grew with n: $newtonSmall @500 vs $newtonBig @8000")
-    assert(admmSmall == admmBig,
-      s"admm jobs grew with n: $admmSmall @500 vs $admmBig @8000")
+    val small = jobsAt(500)
+    val big = jobsAt(8000)
+    for (solver <- small.keys)
+      assert(small(solver) == big(solver),
+        s"$solver jobs grew with n: ${small(solver)} @500 vs ${big(solver)} @8000")
   }
 
   test("clusterPairs per-round jobs are INDEPENDENT of edge count") {

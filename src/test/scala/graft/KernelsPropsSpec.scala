@@ -10,7 +10,8 @@ import org.scalacheck.Prop.forAll
 /** Property tests pinning the distributed kernels to driver-side Breeze
   * linear algebra on generated data: lossGrad equals the per-row sum,
   * gradHess's Hessian is the symmetric PSD XᵀWX, colStats matches
-  * population moments, and the fused ladder equals pointwise losses.
+  * population moments, the fused ladder equals pointwise losses and
+  * gradients, and the multi-candidate pass is bit-identical to lossGrad.
   * Complements KernelsTreeSpec (combine-order determinism) — here the
   * VALUES are checked against an independent computation. */
 object KernelsPropsSpec extends Properties("Kernels") {
@@ -23,10 +24,11 @@ object KernelsPropsSpec extends Properties("Kernels") {
 
   private case class Fx(rows: Seq[(Array[Double], Double)], beta: Array[Double])
 
-  private def fxGen(labelGen: Gen[Double]): Gen[Fx] = for {
+  private def fxGen(labelGen: Gen[Double],
+      xGen: Gen[Double] = Gen.choose(-2.0, 2.0)): Gen[Fx] = for {
     n <- Gen.choose(3, 10)
     p <- Gen.choose(1, 3)
-    xs <- Gen.listOfN(n * p, Gen.choose(-2.0, 2.0))
+    xs <- Gen.listOfN(n * p, xGen)
     ys <- Gen.listOfN(n, labelGen)
     beta <- Gen.listOfN(p, Gen.choose(-1.0, 1.0))
   } yield Fx(
@@ -38,6 +40,17 @@ object KernelsPropsSpec extends Properties("Kernels") {
     val df = fx.rows.map { case (f, y) => (f.toSeq, y) }.toDF("features", "label")
     GlmData.fromDF(df, numFeatures = fx.beta.length)
   }
+
+  /** The same rows as SparseVectors (zeros dropped), over 3 partitions. */
+  private def toSparseData(fx: Fx): GlmData = {
+    val rows = fx.rows.map { case (f, y) =>
+      (org.apache.spark.ml.linalg.Vectors.dense(f).toSparse: org.apache.spark.ml.linalg.Vector, y)
+    }
+    new GlmData(spark.sparkContext.parallelize(rows, 3), fx.beta.length, isSparse = true)
+  }
+
+  /** Half the entries exactly zero, so sparse rows skip actives. */
+  private val sparseX = Gen.frequency((1, Gen.const(0.0)), (1, Gen.choose(-2.0, 2.0)))
 
   private val fams = Seq(
     ("logistic", Logistic, Gen.oneOf(0.0, 1.0)),
@@ -121,12 +134,34 @@ object KernelsPropsSpec extends Properties("Kernels") {
         val data = toData(fx)
         val beta = DenseVector(fx.beta)
         val dir = DenseVector(fx.beta.map(b => 0.5 - b * 0.25))
-        val ladder = Kernels.lossLadder(data, beta, dir, steps.toArray, Logistic)
-        val ok = steps.indices.forall { k =>
-          val bk = beta - dir * steps(k)
-          math.abs(ladder(k) - Kernels.loss(data, bk, Logistic)) <=
-            1e-9 * math.max(1.0, math.abs(ladder(k)))
-        }
+        // and the gradients: taken at the ladder margin t − s·u, so equal
+        // to an exact-margin gradient pass up to rounding
+        val (losses, grads) = Kernels.lossLadder(data, beta, dir, steps.toArray, Logistic)
+        def close(a: Double, b: Double) = math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
+        val ok = losses.length == steps.length && grads.length == steps.length &&
+          steps.indices.forall { k =>
+            val bk = beta - dir * steps(k)
+            close(losses(k), Kernels.loss(data, bk, Logistic)) &&
+              grads(k).toArray.zip(Kernels.grad(data, bk, Logistic).toArray)
+                .forall { case (a, b) => close(a, b) }
+          }
         Prop(ok)
     }
+
+  property("lossMulti is bit-identical to lossGrad at every candidate (dense and sparse)") =
+    Prop.all(fams.flatMap { case (nm, fam, yGen) =>
+      Seq(("dense", fxGen(yGen), toData _),
+        ("sparse", fxGen(yGen, sparseX), toSparseData _)).map { case (kind, gen, mk) =>
+        forAll(gen, Gen.listOfN(3, Gen.choose(-1.0, 1.0))) { (fx, shifts) =>
+          val data = mk(fx)
+          val betas = shifts.map(c => DenseVector(fx.beta.map(_ + c))).toArray
+          val (losses, grads) = Kernels.lossMulti(data, betas, fam)
+          val ok = losses.length == betas.length && betas.indices.forall { k =>
+            val (l, g) = Kernels.lossGrad(data, betas(k), fam)
+            losses(k) == l && grads(k) == g
+          }
+          Prop(ok) :| s"$nm/$kind"
+        }
+      }
+    }: _*)
 }

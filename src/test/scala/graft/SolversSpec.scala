@@ -73,6 +73,38 @@ class SolversSpec extends AnyFunSuite {
     } fitBeatsRandom(solver, fam, reg, lam, nchunks = 4)
   }
 
+  test("proximal_grad past the first probe pass: badly scaled normal fit") {
+    // features ×1e4 and no normalize: the Lipschitz constant is ~1e11, so
+    // every step of the first 10-chunk (1 … 1e-9) raises the loss —
+    // candidates 0–1 are rejected, the rest of the chunk runs in a second
+    // pass and the accept falls in a later 10-chunk
+    val df = Datasets.makeClassification(spark, nSamples = 1000, nFeatures = 2,
+      chunksize = 250, seed = 12345)
+    val base = GlmData.fromDF(df, numFeatures = 2)
+    val data = new GlmData(base.rows.map { case (x, y) =>
+      (org.apache.spark.ml.linalg.Vectors.dense(x.toArray.map(_ * 1e4)), y) },
+      2, isSparse = false).persist()
+    val reg = Regularizer.get("l2")
+    val lam = 0.1
+    val zero = DenseVector.zeros[Double](2)
+    val (l0, g0) = Kernels.lossGrad(data, zero, Normal)
+    for (j <- 0 until 10) {
+      val s = math.pow(0.1, j)
+      val cand = reg.proximalOperator(zero - g0 * s, s * lam)
+      assert(Kernels.loss(data, cand, Normal) >= l0, s"step $s is accepted")
+    }
+    def fit() = Solvers.proximalGrad(data, reg, lam, Normal, maxIter = 100,
+      tol = 1e-7, normalize = false)
+    val beta = fit()
+    assert(beta == fit(), "not deterministic")
+    val rng = new scala.util.Random(987)
+    val testVec = DenseVector.fill(2)(rng.nextGaussian())
+    val fLoss = Kernels.loss(data, beta, Normal) + lam * reg.f(beta)
+    val rLoss = Kernels.loss(data, testVec, Normal) + lam * reg.f(testVec)
+    data.unpersist()
+    assert(fLoss < rLoss, s"$fLoss !< $rLoss")
+  }
+
   test("unregularized fits beat a random vector (newton/lbfgs/gd × families)") {
     for {
       solver <- Seq("newton", "lbfgs", "gradient_descent")
