@@ -37,12 +37,10 @@ final case class GlmParams(
       * reference restarts from ones every iteration — a quirk; warm
       * start is the fast path, default off for parity) */
     admmWarmStart: Boolean = false,
-    /** cache training rows SERIALIZED (MEMORY_AND_DISK_SER) instead of
-      * as live objects: ~3× smaller footprint for a per-iteration
-      * deserialization cost. Set when rows × p approaches executor
-      * memory — the regime where the default object cache OOMs or
-      * GC-thrashes (see GlmData.persist). Bit-identical fits either
-      * way. */
+    /** cache the training blocks SERIALIZED (MEMORY_AND_DISK_SER). The
+      * blocks are primitive arrays, so this no longer shrinks the cache
+      * (measured equal, README "Compatibility notes"); it only adds a
+      * per-pass deserialization. Bit-identical fits either way. */
     serializedCache: Boolean = false)
 
 /** Base GLM estimator (estimators.py:19-98): DataFrame in, fitted

@@ -18,9 +18,9 @@ case class LossGrad(loss: Double, grad: Array[Double])
   * The buffer carries a primitive `Array[Double]` that `reduce`/`merge`
   * mutate in place (the Aggregator contract explicitly permits mutating
   * and returning the buffer) — zero per-row gradient copies. Ragged rows
-  * fail loudly with the same contract as `Kernels.axpy`: a row whose
-  * feature vector disagrees with `beta.length` would otherwise silently
-  * truncate (longer) or read out of bounds (shorter).
+  * fail loudly, as in `GlmData`'s block builder: a row whose feature
+  * vector disagrees with `beta.length` would otherwise silently truncate
+  * (longer) or read out of bounds (shorter).
   */
 class GlmLossGradAggregator(family: Family, beta: Array[Double])
     extends Aggregator[GlmRow, LossGrad, LossGrad] {

@@ -1,9 +1,9 @@
 package graft.linalg
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import graft.core.GlmData
+import graft.core.{GlmData, RowCursor}
 import graft.families.Family
-import org.apache.spark.ml.linalg.{DenseVector => MlDense, SparseVector => MlSparse, Vector => MlVector}
+import org.apache.spark.ml.linalg.{Vector => MlVector}
 
 /** The engine's entire distributed surface: five single-pass kernels over
   * the row-partitioned design matrix. Everything else (β updates, line
@@ -19,8 +19,10 @@ import org.apache.spark.ml.linalg.{DenseVector => MlDense, SparseVector => MlSpa
   *    fix the order ourselves);
   *  - β ships to executors via closure capture of a small primitive array
   *    (≙ scatter/broadcast, utils.py:208-215);
-  *  - sparse rows never densify: accumulation walks active entries only
-  *    (utils.py sparse dispatch; MLlib's own kernel idiom).
+  *  - kernels walk the packed blocks with a [[RowCursor]]: no per-row
+  *    objects, sparse rows never densify (accumulation walks stored
+  *    entries only), and a standardized view's rows are standardized
+  *    inline, one scratch row per task.
   */
 object Kernels {
 
@@ -28,8 +30,10 @@ object Kernels {
     * driver-side fold (cheaper: no extra stage) — both bit-deterministic. */
   private[graft] val TreeCombineThreshold = 128
 
-  /** Deterministic aggregate: per-partition seqOp, then partials combined
-    * in partition-index order. U must be O(p²) small.
+  /** Deterministic aggregate: `fold` runs once per partition over a
+    * [[RowCursor]] on its blocks (rows in order, one running accumulator
+    * across the blocks), then partials are combined in partition-index
+    * order. U must be O(p²) small.
     *
     * Scale shape: a flat collect of n partials is O(n·p²) through the
     * driver — fine at local partition counts, a scale-killer at the 10⁵–10⁶
@@ -42,23 +46,16 @@ object Kernels {
     * run-to-run (the reference's determinism contract,
     * test_algos_families.py:141-160) while driver traffic drops from
     * O(n·p²) to O(√n·p²). */
-  def partitionAggregate[U: scala.reflect.ClassTag](
-      data: GlmData)(zero: () => U)(
-      seqOp: (U, MlVector, Double) => U,
-      combOp: (U, U) => U): U = {
-    val partials = data.rows
-      .mapPartitionsWithIndex { (idx, it) =>
-        var acc = zero()
-        while (it.hasNext) {
-          val (x, y) = it.next()
-          acc = seqOp(acc, x, y)
-        }
-        Iterator.single((idx, acc))
-      }
-    val n = data.rows.getNumPartitions
+  private[graft] def partitionFold[U: scala.reflect.ClassTag](data: GlmData)(
+      fold: RowCursor => U)(combOp: (U, U) => U): U = {
+    val (p, m, s) = (data.numFeatures, data.mean, data.std)
+    val partials = data.blocks.mapPartitionsWithIndex { (idx, it) =>
+      Iterator.single((idx, fold(new RowCursor(it, p, m, s))))
+    }
+    val n = data.numPartitions
     if (n <= TreeCombineThreshold) {
       val arr = partials.collect()
-      if (arr.isEmpty) zero()
+      if (arr.isEmpty) fold(new RowCursor(Iterator.empty, p, m, s))
       else arr.sortBy(_._1).map(_._2).reduceLeft(combOp)
     } else {
       val groupSize = math.ceil(math.sqrt(n.toDouble)).toInt
@@ -73,6 +70,17 @@ object Kernels {
       groupFolds.sortBy(_._1).map(_._2).reduceLeft(combOp)
     }
   }
+
+  /** [[partitionFold]] with a per-row seqOp over MLlib row vectors. */
+  def partitionAggregate[U: scala.reflect.ClassTag](
+      data: GlmData)(zero: () => U)(
+      seqOp: (U, MlVector, Double) => U,
+      combOp: (U, U) => U): U =
+    partitionFold(data)({ c =>
+      var acc = zero()
+      while (c.next()) acc = seqOp(acc, c.row, c.y)
+      acc
+    })(combOp)
 
   /** Ordered fold of indexed per-partition partials from an ARBITRARY
     * RDD (the [[partitionAggregate]] discipline, generalized for the
@@ -141,56 +149,6 @@ object Kernels {
     orderedPartialFold(partials, rdd.getNumPartitions, combOp, flatThreshold)
   }
 
-  /** x·b for dense or sparse rows (no densify). */
-  @inline private[graft] def dot(x: MlVector, b: Array[Double]): Double = x match {
-    case d: MlDense =>
-      val v = d.values
-      // one predictable branch per row: a short ragged row would
-      // otherwise contribute a silent PARTIAL dot (wrong fit, no error)
-      // and a long one an unhelpful AIOOBE on b
-      if (v.length != b.length)
-        throw new IllegalArgumentException(
-          s"ragged row: vector of dim ${v.length}, expected ${b.length}")
-      var s = 0.0
-      var i = 0
-      while (i < v.length) { s += v(i) * b(i); i += 1 }
-      s
-    case s: MlSparse =>
-      // same guard as the dense arm: a ragged sparse row would otherwise
-      // contribute a silent partial dot (its size never touches b), and
-      // SparseVector's constructor already guarantees indices < size, so
-      // one size comparison is the whole check
-      if (s.size != b.length)
-        throw new IllegalArgumentException(
-          s"ragged row: sparse vector of dim ${s.size}, expected ${b.length}")
-      val idx = s.indices
-      val vs = s.values
-      var acc = 0.0
-      var i = 0
-      while (i < idx.length) { acc += vs(i) * b(idx(i)); i += 1 }
-      acc
-  }
-
-  /** g += w·x for dense or sparse rows. */
-  @inline private[graft] def axpy(w: Double, x: MlVector, g: Array[Double]): Unit =
-    x match {
-      case d: MlDense =>
-        val v = d.values
-        if (v.length != g.length)
-          throw new IllegalArgumentException(
-            s"ragged row: vector of dim ${v.length}, expected ${g.length}")
-        var i = 0
-        while (i < v.length) { g(i) += w * v(i); i += 1 }
-      case s: MlSparse =>
-        if (s.size != g.length)
-          throw new IllegalArgumentException(
-            s"ragged row: sparse vector of dim ${s.size}, expected ${g.length}")
-        val idx = s.indices
-        val vs = s.values
-        var i = 0
-        while (i < idx.length) { g(idx(i)) += w * vs(i); i += 1 }
-    }
-
   /** Fused loss + gradient in one pass (the reference's shared-graph
     * `compute(loss_fn, gradient_fn)`, algorithms.py:405). */
   def lossGrad(data: GlmData, beta: DenseVector[Double], family: Family)
@@ -198,13 +156,16 @@ object Kernels {
     val b = beta.toArray
     val p = data.numFeatures
     val fam = family
-    val (loss, g) = partitionAggregate(data)(() => (0.0, new Array[Double](p)))(
-      { case ((l, g), x, y) =>
-        val xb = dot(x, b)
-        axpy(fam.dLoss(xb, y), x, g)
-        (l + fam.loss(xb, y), g)
-      },
-      { case ((l1, g1), (l2, g2)) =>
+    val (loss, g) = partitionFold(data)({ c =>
+        var l = 0.0
+        val g = new Array[Double](p)
+        while (c.next()) {
+          val xb = c.dot(b)
+          c.axpy(fam.dLoss(xb, c.y), g)
+          l += fam.loss(xb, c.y)
+        }
+        (l, g)
+      })({ case ((l1, g1), (l2, g2)) =>
         var i = 0
         while (i < p) { g1(i) += g2(i); i += 1 }
         (l1 + l2, g1)
@@ -237,42 +198,43 @@ object Kernels {
     val p = data.numFeatures
     val fam = family
     val tri = p * (p + 1) / 2
-    val (g, h) = partitionAggregate(data)(
-      () => (new Array[Double](p), new Array[Double](tri)))(
-      { case ((g, h), x, y) =>
-        val xb = dot(x, b)
-        val w1 = fam.dLoss(xb, y)
-        val w2 = fam.d2Loss(xb, y)
-        axpy(w1, x, g)
-        x match {
-          case dv: MlDense =>
-            val v = dv.values
+    val (g, h) = partitionFold(data)({ c =>
+        val g = new Array[Double](p)
+        val h = new Array[Double](tri)
+        while (c.next()) {
+          val xb = c.dot(b)
+          val w1 = fam.dLoss(xb, c.y)
+          val w2 = fam.d2Loss(xb, c.y)
+          c.axpy(w1, g)
+          val v = c.vals
+          val lo = c.lo
+          val hi = c.hi
+          val idx = c.idx
+          if (idx == null) {
             var i = 0
             while (i < p) {
-              val wxi = w2 * v(i)
+              val wxi = w2 * v(lo + i)
               var o = i * p - i * (i - 1) / 2
               var j = i
-              while (j < p) { h(o) += wxi * v(j); j += 1; o += 1 }
+              while (j < p) { h(o) += wxi * v(lo + j); j += 1; o += 1 }
               i += 1
             }
-          case sv: MlSparse =>
-            val idx = sv.indices
-            val vs = sv.values
-            var a = 0
-            while (a < idx.length) {
-              val wxi = w2 * vs(a)
-              var c = 0
-              while (c < idx.length) {
-                val i = idx(a); val j = idx(c)
-                if (j >= i) h(i * p - i * (i - 1) / 2 + (j - i)) += wxi * vs(c)
-                c += 1
-              }
+          } else {
+            // indices strictly increase, so the upper triangle (j ≥ i)
+            // of the row's outer product is every pair with c ≥ a
+            var a = lo
+            while (a < hi) {
+              val wxi = w2 * v(a)
+              val i = idx(a)
+              val o = i * p - i * (i - 1) / 2 - i
+              var k = a
+              while (k < hi) { h(o + idx(k)) += wxi * v(k); k += 1 }
               a += 1
             }
+          }
         }
         (g, h)
-      },
-      { case ((g1, h1), (g2, h2)) =>
+      })({ case ((g1, h1), (g2, h2)) =>
         var i = 0
         while (i < p) { g1(i) += g2(i); i += 1 }
         var k = 0
@@ -314,21 +276,22 @@ object Kernels {
     val ss = steps
     val fam = family
     val p = data.numFeatures
-    val (losses, grads) = partitionAggregate(data)(
-      () => (new Array[Double](ss.length), Array.fill(ss.length)(new Array[Double](p))))(
-      { (acc, x, y) =>
-        val t = dot(x, b)
-        val u = dot(x, d)
-        var k = 0
-        while (k < ss.length) {
-          val m = t - ss(k) * u
-          acc._1(k) += fam.loss(m, y)
-          axpy(fam.dLoss(m, y), x, acc._2(k))
-          k += 1
+    val (losses, grads) = partitionFold(data)({ c =>
+        val ls = new Array[Double](ss.length)
+        val gs = Array.fill(ss.length)(new Array[Double](p))
+        while (c.next()) {
+          val t = c.dot(b)
+          val u = c.dot(d)
+          var k = 0
+          while (k < ss.length) {
+            val m = t - ss(k) * u
+            ls(k) += fam.loss(m, c.y)
+            c.axpy(fam.dLoss(m, c.y), gs(k))
+            k += 1
+          }
         }
-        acc
-      },
-      addCandidates)
+        (ls, gs)
+      })(addCandidates)
     (losses, grads.map(DenseVector(_)))
   }
 
@@ -344,19 +307,20 @@ object Kernels {
     val bs = betas.map(_.toArray)
     val fam = family
     val p = data.numFeatures
-    val (losses, grads) = partitionAggregate(data)(
-      () => (new Array[Double](bs.length), Array.fill(bs.length)(new Array[Double](p))))(
-      { (acc, x, y) =>
-        var k = 0
-        while (k < bs.length) {
-          val xb = dot(x, bs(k))
-          acc._1(k) += fam.loss(xb, y)
-          axpy(fam.dLoss(xb, y), x, acc._2(k))
-          k += 1
+    val (losses, grads) = partitionFold(data)({ c =>
+        val ls = new Array[Double](bs.length)
+        val gs = Array.fill(bs.length)(new Array[Double](p))
+        while (c.next()) {
+          var k = 0
+          while (k < bs.length) {
+            val xb = c.dot(bs(k))
+            ls(k) += fam.loss(xb, c.y)
+            c.axpy(fam.dLoss(xb, c.y), gs(k))
+            k += 1
+          }
         }
-        acc
-      },
-      addCandidates)
+        (ls, gs)
+      })(addCandidates)
     (losses, grads.map(DenseVector(_)))
   }
 
@@ -394,24 +358,26 @@ object Kernels {
     * (count=z, mean=0, M2=0) block. */
   def colStats(data: GlmData): (DenseVector[Double], DenseVector[Double]) = {
     val p = data.numFeatures
-    val (n, cnt, mu, m2) = partitionAggregate(data)(
-      () => (0L, new Array[Long](p), new Array[Double](p), new Array[Double](p)))(
-      { case ((n, cnt, mu, m2), x, _) =>
-        // same fail-loud contract as dot/axpy: a ragged row here would
-        // die as an opaque ArrayIndexOutOfBoundsException (long row) or
-        // silently skew the implicit-zero folding (short sparse row)
-        if (x.size != p)
-          throw new IllegalArgumentException(
-            s"ragged row: vector of dim ${x.size}, expected $p")
-        x.foreachActive { (i, v) =>
-          cnt(i) += 1
-          val d = v - mu(i)
-          mu(i) += d / cnt(i)
-          m2(i) += d * (v - mu(i))
+    val (n, cnt, mu, m2) = partitionFold(data)({ c =>
+        var n = 0L
+        val (cnt, mu, m2) = (new Array[Long](p), new Array[Double](p), new Array[Double](p))
+        while (c.next()) {
+          val vs = c.vals
+          val idx = c.idx
+          var k = c.lo
+          while (k < c.hi) {
+            val i = if (idx == null) k - c.lo else idx(k)
+            val v = vs(k)
+            cnt(i) += 1
+            val d = v - mu(i)
+            mu(i) += d / cnt(i)
+            m2(i) += d * (v - mu(i))
+            k += 1
+          }
+          n += 1
         }
-        (n + 1, cnt, mu, m2)
-      },
-      { case ((n1, c1, u1, s1), (n2, c2, u2, s2)) =>
+        (n, cnt, mu, m2)
+      })({ case ((n1, c1, u1, s1), (n2, c2, u2, s2)) =>
         var i = 0
         while (i < p) {
           if (c2(i) > 0) {
@@ -450,5 +416,9 @@ object Kernels {
 
   /** Sum of labels (used by the moment-condition oracle + metrics). */
   def labelSum(data: GlmData): Double =
-    partitionAggregate(data)(() => 0.0)((a, _, y) => a + y, _ + _)
+    partitionFold(data)({ c =>
+      var a = 0.0
+      while (c.next()) a += c.y
+      a
+    })(_ + _)
 }

@@ -2,7 +2,6 @@ package graft.solvers
 
 import breeze.linalg.DenseVector
 import graft.core.GlmData
-import graft.linalg.Kernels
 
 /** The reference's `@normalize` decorator (utils.py:14-39): standardize
   * columns, run the solver on the standardized data, un-transform the
@@ -23,7 +22,7 @@ object Normalize {
       solve: GlmData => DenseVector[Double]): DenseVector[Double] = {
     if (!normalize) return solve(data)
     val p = data.numFeatures
-    val (mean0, std0) = Kernels.colStats(data)
+    val (mean0, std0) = data.columnStats
     val interceptIdx = (0 until p).filter(i => std0(i) == 0.0)
     if (interceptIdx.length > 1)
       throw new IllegalArgumentException("Multiple constant columns detected!")
@@ -40,21 +39,11 @@ object Normalize {
     val sArr = std.toArray
     // standardization densifies by construction (x − mean is dense unless
     // mean is 0) — the reason the estimator disables normalize for sparse
-    // input (estimators.py:82-84). The standardized rows derive LAZILY
-    // from the (cached) parent on every kernel pass instead of persisting
-    // a second copy of the dataset — at 100 TB a materialized Xn doubles
-    // the cache footprint for what is two flops per value (SURVEY A5:
-    // fold scaling into the kernels).
-    val xn = new GlmData(
-      data.rows.map { case (x, y) =>
-        val xa = x.toArray
-        val out = new Array[Double](xa.length)
-        var i = 0
-        while (i < xa.length) { out(i) = (xa(i) - mArr(i)) / sArr(i); i += 1 }
-        (org.apache.spark.ml.linalg.Vectors.dense(out), y)
-      },
-      p, isSparse = false)
-    val out = solve(xn).copy
+    // input (estimators.py:82-84). The solver sees a view of the same
+    // (cached) blocks that carries (mean, std); the kernels standardize
+    // each row inline instead of a second copy of the dataset being
+    // mapped or persisted (SURVEY A5: fold scaling into the kernels).
+    val out = solve(data.standardized(mArr, sArr)).copy
     // un-transform: out[i] -= Σ(out·mean/std) at the intercept slot; out /= std
     var iAdj = 0.0
     var i = 0

@@ -62,6 +62,26 @@ class GlmDataSpec extends AnyFunSuite {
     assert(causeChainHas(e, "ragged row"), e.toString)
   }
 
+  test("the block builder rejects ragged dense and sparse rows, naming the dimension") {
+    def raggedError(rows: Seq[(org.apache.spark.ml.linalg.Vector, Double)]): Throwable = {
+      val data = new GlmData(spark.sparkContext.parallelize(rows, 1), 3, isSparse = false)
+      val e = intercept[Exception](data.rows.count())
+      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .find(_.isInstanceOf[IllegalArgumentException]).getOrElse(e)
+    }
+    val dense = raggedError(Seq(
+      (Vectors.dense(1.0, 2.0, 3.0), 1.0), (Vectors.dense(1.0, 2.0), 0.0)))
+    assert(dense.isInstanceOf[IllegalArgumentException], dense.toString)
+    assert(dense.getMessage.contains("ragged row: vector of dim 2, expected 3"), dense.getMessage)
+    val sparse = raggedError(Seq(
+      (Vectors.sparse(3, Array(0), Array(1.0)), 1.0),
+      (Vectors.dense(1.0, 2.0, 3.0), 0.0),
+      (Vectors.sparse(5, Array(4), Array(1.0)), 0.0)))
+    assert(sparse.isInstanceOf[IllegalArgumentException], sparse.toString)
+    assert(sparse.getMessage.contains("ragged row: sparse vector of dim 5, expected 3"),
+      sparse.getMessage)
+  }
+
   test("fromDF fails fast on NULL rows and NULL array elements") {
     val arrDf = Seq(
       (Some(Seq(Some(1.0), Some(2.0))), Some(1.0)),

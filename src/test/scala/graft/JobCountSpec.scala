@@ -82,6 +82,15 @@ class JobCountSpec extends AnyFunSuite {
     assert(pg <= iters + 3, s"proximal_grad jobs=$pg for $iters iterations")
   }
 
+  test("normalize reuses a GlmData's column stats: the second call runs one job fewer") {
+    val data = Datasets.makeInterceptData(spark, 500, 3).persist()
+    data.rows.count()
+    val first = countJobs(Solvers.newton(data, maxIter = 3, tol = 0.0))
+    val second = countJobs(Solvers.newton(data, maxIter = 3, tol = 0.0))
+    data.unpersist()
+    assert(second == first - 1, s"first call $first jobs, second $second (no colStats)")
+  }
+
   test("admm: 1 local-solve job per iteration (+ normalize overhead)") {
     val data = Datasets.makeInterceptData(spark, 500, 3).persist()
     data.rows.count()

@@ -11,7 +11,9 @@ import org.scalacheck.Prop.forAll
   * linear algebra on generated data: lossGrad equals the per-row sum,
   * gradHess's Hessian is the symmetric PSD XᵀWX, colStats matches
   * population moments, the fused ladder equals pointwise losses and
-  * gradients, and the multi-candidate pass is bit-identical to lossGrad.
+  * gradients, the multi-candidate pass is bit-identical to lossGrad, and
+  * every kernel on the inline-standardized view is bit-identical to the
+  * same kernel on an explicitly standardized copy.
   * Complements KernelsTreeSpec (combine-order determinism) — here the
   * VALUES are checked against an independent computation. */
 object KernelsPropsSpec extends Properties("Kernels") {
@@ -164,4 +166,51 @@ object KernelsPropsSpec extends Properties("Kernels") {
         }
       }
     }: _*)
+
+  /** n rows × p from one seed: dense, sparse (half the entries zero, rows
+    * as SparseVectors) or mixed (every third row sparse). */
+  private def layoutRows(layout: String, seed: Long, n: Int, p: Int)
+      : Seq[(org.apache.spark.ml.linalg.Vector, Double)] = {
+    val rng = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val sparseRow = layout == "sparse" || (layout == "mixed" && i % 3 == 1)
+      val x = Array.fill(p)(
+        if (layout != "dense" && rng.nextBoolean()) 0.0 else rng.nextGaussian() * 3 + 1)
+      val v = org.apache.spark.ml.linalg.Vectors.dense(x)
+      (if (sparseRow) v.toSparse else v, if (rng.nextBoolean()) 1.0 else 0.0)
+    }
+  }
+
+  property("every kernel on the inline-standardized view equals it on a materialized (x − m)/s") =
+    forAll(Gen.choose(0L, 1L << 40), Gen.choose(4500, 6000), Gen.choose(3, 5)) { (seed, n, p) =>
+      val sc = spark.sparkContext
+      val rng = new scala.util.Random(seed)
+      val mean = Array.fill(p)(rng.nextGaussian())
+      val std = Array.fill(p)(0.5 + rng.nextDouble())
+      val fam = fams((seed % 3).toInt)._2
+      val b = DenseVector.fill(p)(rng.nextGaussian() * 0.1)
+      val dir = DenseVector.fill(p)(rng.nextGaussian() * 0.1)
+      Prop.all(Seq("dense", "sparse", "mixed").map { layout =>
+        val rows = layoutRows(layout, seed, n, p)
+        val raw = new GlmData(sc.parallelize(rows, 2), p, isSparse = layout == "sparse")
+        val view = raw.standardized(mean, std)
+        val mat = new GlmData(sc.parallelize(rows.map { case (x, y) =>
+          val xa = x.toArray
+          (org.apache.spark.ml.linalg.Vectors.dense(
+            Array.tabulate(p)(i => (xa(i) - mean(i)) / std(i))): org.apache.spark.ml.linalg.Vector, y)
+        }, 2), p, isSparse = false)
+        val blocksPerPartition = raw.blocks.mapPartitions(it => Iterator.single(it.size)).collect()
+        def same[T](k: GlmData => T): Boolean = k(view) == k(mat)
+        val ok = blocksPerPartition.forall(_ > 1) &&
+          same(Kernels.lossGrad(_, b, fam)) &&
+          same(Kernels.gradHess(_, b, fam)) &&
+          same(d => Kernels.lossLadder(d, b, dir, Array(1.0, 0.5, 0.1), fam) match {
+            case (l, g) => (l.toSeq, g.toSeq) }) &&
+          same(d => Kernels.lossMulti(d, Array(b, dir), fam) match {
+            case (l, g) => (l.toSeq, g.toSeq) }) &&
+          same(Kernels.colStats) &&
+          same(Kernels.labelSum)
+        Prop(ok) :| s"$layout blocks=${blocksPerPartition.mkString(",")}"
+      }: _*)
+    }
 }

@@ -18,7 +18,8 @@ class SolversSpec extends AnyFunSuite {
     val b = beta.toArray
     val (pSum, ySum) = Kernels.partitionAggregate(data)(() => (0.0, 0.0))(
       { case ((ps, ys), x, y) =>
-        val xb = Kernels.dot(x, b)
+        var xb = 0.0
+        x.foreachActive((i, v) => xb += v * b(i))
         (ps + 1.0 / (1.0 + math.exp(-xb)), ys + y)
       },
       { case ((a1, b1), (a2, b2)) => (a1 + a2, b1 + b2) })
