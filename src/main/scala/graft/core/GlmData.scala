@@ -347,8 +347,4 @@ object GlmData {
       df.select(feat.as("features"), label.cast("double").as("label")),
       numFeatures = featureCols.length)
   }
-
-  /** DataFrame-side intercept append (for predict paths that stay in SQL). */
-  def addInterceptCol(features: Column): Column =
-    concat(features, array(lit(1.0)))
 }

@@ -41,6 +41,9 @@ final case class GlmParams(
       * blocks are primitive arrays, so this no longer shrinks the cache
       * (measured equal, README "Compatibility notes"); it only adds a
       * per-pass deserialization. Bit-identical fits either way. */
+    @deprecated("the packed block cache measures the same size at " +
+      "MEMORY_AND_DISK and MEMORY_AND_DISK_SER (3.08 MB both), so this " +
+      "only adds a per-pass deserialization; it will be removed", "0.1.0")
     serializedCache: Boolean = false)
 
 /** Base GLM estimator (estimators.py:19-98): DataFrame in, fitted

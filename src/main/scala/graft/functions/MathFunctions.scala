@@ -18,10 +18,8 @@ object MathFunctions {
   def log1pexp(c: Column): Column =
     greatest(c, lit(0.0)) + log1p(exp(-abs(c)))
 
-  /** exp / log1p / absolute / sign — direct built-ins, named to mirror
-    * utils.py's dispatch table. */
-  def exp_(c: Column): Column = exp(c)
-  def log1p_(c: Column): Column = log1p(c)
+  /** absolute / sign — direct built-ins, named to mirror utils.py's
+    * dispatch table. */
   def absolute(c: Column): Column = abs(c)
   def sign(c: Column): Column = signum(c)
 

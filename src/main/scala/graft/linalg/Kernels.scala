@@ -3,7 +3,6 @@ package graft.linalg
 import breeze.linalg.{DenseMatrix, DenseVector}
 import graft.core.{GlmData, RowCursor}
 import graft.families.Family
-import org.apache.spark.ml.linalg.{Vector => MlVector}
 
 /** The engine's entire distributed surface: five single-pass kernels over
   * the row-partitioned design matrix. Everything else (β updates, line
@@ -13,10 +12,7 @@ import org.apache.spark.ml.linalg.{Vector => MlVector}
   *  - every kernel is ONE scan, no shuffle: per-partition partials of size
   *    O(p) / O(p²) are combined on the driver;
   *  - partials are combined in partition-index order so results are
-  *    bit-deterministic run-to-run (the reference's determinism contract,
-  *    test_algos_families.py:141-160 — dask's tree reductions are
-  *    order-fixed by graph structure; Spark's treeAggregate is not, so we
-  *    fix the order ourselves);
+  *    bit-deterministic run-to-run ([[orderedPartialFold]]);
   *  - β ships to executors via closure capture of a small primitive array
   *    (≙ scatter/broadcast, utils.py:208-215);
   *  - kernels walk the packed blocks with a [[RowCursor]]: no per-row
@@ -26,68 +22,37 @@ import org.apache.spark.ml.linalg.{Vector => MlVector}
   */
 object Kernels {
 
-  /** Partition counts above this use the tree combine; below it, a direct
-    * driver-side fold (cheaper: no extra stage) — both bit-deterministic. */
+  /** Kernel partial counts above this combine through reducer runs;
+    * at or below it, a direct driver-side fold (cheaper: no extra
+    * stage) — both bit-deterministic. */
   private[graft] val TreeCombineThreshold = 128
+
+  /** The flat-collect bound for [[orderedRddAggregate]] and the IVF
+    * trainer: their partials are O(k·d), far bigger than a GLM kernel's
+    * O(p²), so the bound is tighter than [[TreeCombineThreshold]]. */
+  private[graft] val TrainerCombineThreshold = 64
 
   /** Deterministic aggregate: `fold` runs once per partition over a
     * [[RowCursor]] on its blocks (rows in order, one running accumulator
     * across the blocks), then partials are combined in partition-index
-    * order. U must be O(p²) small.
-    *
-    * Scale shape: a flat collect of n partials is O(n·p²) through the
-    * driver — fine at local partition counts, a scale-killer at the 10⁵–10⁶
-    * partitions a 100 TB input produces. Above [[TreeCombineThreshold]] we
-    * insert one tree level: partials are grouped by contiguous runs of
-    * ⌈√n⌉ partition ids, each group left-folded in id order inside a single
-    * reducer, and the ≤√n group results left-folded on the driver (ordered
-    * analog of MLlib's treeAggregate(depth=2)). The combine tree is a pure
-    * function of the partition count, so results stay bit-identical
-    * run-to-run (the reference's determinism contract,
-    * test_algos_families.py:141-160) while driver traffic drops from
-    * O(n·p²) to O(√n·p²). */
+    * order by [[orderedPartialFold]] with [[TreeCombineThreshold]]: a
+    * flat collect, sort and left fold up to 128 partitions, recursive
+    * runs of 128 above it, so neither the driver nor any reducer holds
+    * more than 128 O(p²) partials at the 10⁵–10⁶ partitions a 100 TB
+    * input produces. U must be O(p²) small. */
   private[graft] def partitionFold[U: scala.reflect.ClassTag](data: GlmData)(
       fold: RowCursor => U)(combOp: (U, U) => U): U = {
     val (p, m, s) = (data.numFeatures, data.mean, data.std)
     val partials = data.blocks.mapPartitionsWithIndex { (idx, it) =>
       Iterator.single((idx, fold(new RowCursor(it, p, m, s))))
     }
-    val n = data.numPartitions
-    if (n <= TreeCombineThreshold) {
-      val arr = partials.collect()
-      if (arr.isEmpty) fold(new RowCursor(Iterator.empty, p, m, s))
-      else arr.sortBy(_._1).map(_._2).reduceLeft(combOp)
-    } else {
-      val groupSize = math.ceil(math.sqrt(n.toDouble)).toInt
-      val numGroups = (n + groupSize - 1) / groupSize
-      val groupFolds = partials
-        .map { case (idx, u) => (idx / groupSize, (idx, u)) }
-        .groupByKey(new org.apache.spark.HashPartitioner(numGroups))
-        .map { case (g, us) =>
-          (g, us.toArray.sortBy(_._1).map(_._2).reduceLeft(combOp))
-        }
-        .collect()
-      groupFolds.sortBy(_._1).map(_._2).reduceLeft(combOp)
-    }
+    orderedPartialFold(partials, data.numPartitions, combOp, TreeCombineThreshold)
+      .getOrElse(fold(new RowCursor(Iterator.empty, p, m, s)))
   }
 
-  /** [[partitionFold]] with a per-row seqOp over MLlib row vectors. */
-  def partitionAggregate[U: scala.reflect.ClassTag](
-      data: GlmData)(zero: () => U)(
-      seqOp: (U, MlVector, Double) => U,
-      combOp: (U, U) => U): U =
-    partitionFold(data)({ c =>
-      var acc = zero()
-      while (c.next()) acc = seqOp(acc, c.row, c.y)
-      acc
-    })(combOp)
-
   /** Ordered fold of indexed per-partition partials from an ARBITRARY
-    * RDD (the [[partitionAggregate]] discipline, generalized for the
-    * index trainers in [[graft.ops.Similarity]] whose partials are
-    * O(k·d) — far bigger than a GLM kernel's O(p²), so the driver-side
-    * flat-collect bound has to be much tighter than
-    * [[TreeCombineThreshold]]):
+    * RDD — the one ordered combine behind [[partitionFold]] and the
+    * index trainers in [[graft.ops.Similarity]]:
     *
     *  - partials arrive as `(partitionIndex, U)`; EMPTY partitions may
     *    simply not emit (additive-identity partials are skippable);
@@ -100,16 +65,18 @@ object Kernels {
     *    collected up to 1024 full k·d partials ≈ 4 GB on the driver —
     *    ADVICE r15);
     *  - the combine tree is a pure function of (partition count,
-    *    flatThreshold): bit-identical run-to-run, the determinism
-    *    contract that replaced treeAggregate's task-completion-order
-    *    merges across the trainer family.
+    *    flatThreshold): bit-identical run-to-run (the reference's
+    *    determinism contract, test_algos_families.py:141-160 — dask's
+    *    tree reductions are order-fixed by graph structure; Spark's
+    *    treeAggregate merges in task-completion order, so we fix the
+    *    order ourselves).
     *
     * Returns None when NO partition emitted a partial. */
   private[graft] def orderedPartialFold[U: scala.reflect.ClassTag](
       partials: org.apache.spark.rdd.RDD[(Int, U)],
       nParts: Int,
       combOp: (U, U) => U,
-      flatThreshold: Int = 64): Option[U] = {
+      flatThreshold: Int = TrainerCombineThreshold): Option[U] = {
     require(flatThreshold >= 2, s"flatThreshold must be >= 2, got $flatThreshold")
     var cur = partials
     var n = nParts
@@ -131,13 +98,12 @@ object Kernels {
   /** [[orderedPartialFold]] over a whole RDD: per-partition left fold
     * into a lazily-allocated accumulator (empty partitions emit nothing,
     * so no O(k·d) zero block rides the task results), then the ordered
-    * combine. The generic sibling of [[partitionAggregate]] for
-    * non-GlmData inputs. */
+    * combine in runs of [[TrainerCombineThreshold]]. The generic sibling
+    * of [[partitionFold]] for non-GlmData inputs. */
   private[graft] def orderedRddAggregate[T, U: scala.reflect.ClassTag](
       rdd: org.apache.spark.rdd.RDD[T])(zero: () => U)(
       seqOp: (U, T) => U,
-      combOp: (U, U) => U,
-      flatThreshold: Int = 64): Option[U] = {
+      combOp: (U, U) => U): Option[U] = {
     val partials = rdd.mapPartitionsWithIndex { (idx, it) =>
       if (!it.hasNext) Iterator.empty
       else {
@@ -146,7 +112,7 @@ object Kernels {
         Iterator.single((idx, acc))
       }
     }
-    orderedPartialFold(partials, rdd.getNumPartitions, combOp, flatThreshold)
+    orderedPartialFold(partials, rdd.getNumPartitions, combOp)
   }
 
   /** Fused loss + gradient in one pass (the reference's shared-graph

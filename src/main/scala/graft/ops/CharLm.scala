@@ -299,12 +299,6 @@ object CharLm {
     scored.withColumn("ppl_bucket", when(col("n_tri") > 0, tier))
   }
 
-  /** One-call convenience: fit on `train`, score `docs`. */
-  def perplexityScore(
-      docs: DataFrame, train: DataFrame, textCol: String = "text",
-      maxVocab: Int = DefaultMaxVocab): DataFrame =
-    score(docs, fit(trainCounts(train, textCol, maxVocab)), textCol)
-
   private def bcOf[T](v: T)(implicit ct: scala.reflect.ClassTag[T])
       : Broadcast[T] =
     org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(v)

@@ -262,12 +262,12 @@ object Similarity {
       val d0 = centroids(0).length
       val k0 = centroids.length
       // Per-partition partials combined in PARTITION-INDEX ORDER — the
-      // Kernels.partitionAggregate discipline, not treeAggregate:
+      // Kernels.partitionFold discipline, not treeAggregate:
       // treeAggregate's combOp merges in task-completion order, which
       // varies run-to-run, and float addition is non-associative, so the
       // trained centroids drifted in the last ulp across identical-seed
-      // runs (caught as a flake by HierIvfSpec's determinism pin, r15 —
-      // latent since r12). Empty partitions emit nothing (allocation is
+      // runs (caught as a flake in r15, latent since r12; pinned by
+      // TrainerDeterminismSpec's 5-run trainIvfCentroids test). Empty partitions emit nothing (allocation is
       // first-use inside the partition, so no k·d zero matrix rides the
       // task binary); Kernels.orderedPartialFold folds contiguous runs
       // of 64 in index order, recursing, so no single holder (driver or
@@ -340,290 +340,6 @@ object Similarity {
     if (!(rdd eq full)) rdd.unpersist(false)
     full.unpersist(false)
     centroids
-  }
-
-  // ---- two-level coarse quantizer (VERDICT r14 #6) ---------------------
-  //
-  // The flat trainer above holds the full k·d centroid matrix on the
-  // driver and assignment is one O(n·k·d) pass — fine to k ~ 10⁵, but at
-  // the autoCellCount discipline (k ≈ n/256) a 10¹⁰-vector corpus wants
-  // k ≈ 4·10⁷: ~20 GB of driver state and an impractical scan. The
-  // standard fix (FAISS IVF_HNSW/IMI lineage) is hierarchical routing:
-  // √k SUPER-cells trained flat (driver state √k·d — 3 MB at the 10¹⁰
-  // target), then ≈√k SUB-centroids per super-cell trained DISTRIBUTED —
-  // the leaf table lives as a DataFrame keyed by super-cell and is never
-  // collected. Routing a vector costs √k·d (broadcast super argmin) +
-  // (k/√k)·d (argmin within one super-cell's sub-list), i.e.
-  // O(√k·d) per vector instead of O(k·d); driver state is
-  // O(√k·d + (k/√k)·d) — the super table plus ONE cell's sub-list in
-  // flight — instead of O(k·d).
-
-  /** Handle for a trained two-level quantizer: `supers` is the flat
-    * √k-sized coarse table (driver/broadcast state), `leaves` the
-    * distributed sub-centroid table `(superId, subId, centroid)` —
-    * leafId (superId, subId) is the routed cell identity. */
-  final case class HierIndex(
-      supers: Array[Array[Double]], leaves: DataFrame) {
-    /** Leaf count (≈ the requested kCells; proportional occupancy
-      * allocation rounds per super-cell). Runs a small agg job. */
-    def leafCount(): Long = leaves.count()
-    /** The flattened leaf table, ordered by (superId, subId) — for
-      * small-k compatibility and the route-equivalence spec ONLY; at
-      * the 10¹⁰-scale k this is the exact O(k·d) driver materialization
-      * the two-level design exists to avoid. */
-    def collectLeaves(): Array[Array[Double]] =
-      leaves.orderBy(col("superId"), col("subId"))
-        .select(col("centroid")).collect()
-        .map(_.getSeq[Double](0).toArray)
-  }
-
-  /** Squared L2 distance between two array<double> columns via
-    * higher-order functions (codegen'd, no UDF). */
-  private def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** Train a two-level quantizer with ≈`kCells` leaves. Super-cells:
-    * `ceil(√kCells)`, trained with the flat [[trainIvfCentroids]] (same
-    * seed/iters/maxTrainPoints semantics — driver state √k·d). Sub-
-    * centroids: allocated per super-cell PROPORTIONALLY to training
-    * occupancy (≥1 each; an empty super-cell keeps its super centroid
-    * as its single leaf so routing is total), initialized from a seeded
-    * hash order, refined with `iters` distributed Lloyd rounds — each
-    * round is one shuffle of the (capped) training set joined to the
-    * per-super sub-lists, one groupBy mean update. The driver never
-    * holds the leaf table.
-    *
-    * Training cost per round: O(t·(√k + k/√k)·d) for t training points
-    * — at k = n/256 that is O(n·√k·d/256) vs the flat trainer's
-    * O(n·k·d/256): a √k speedup with the same broadcast discipline. */
-  def trainIvfCentroidsTwoLevel(
-      corpus: DataFrame, vecCol: String, kCells: Int, iters: Int = 5,
-      seed: Long = 42L, maxTrainPoints: Long = 0L): HierIndex = {
-    require(kCells >= 1, s"kCells must be >= 1, got $kCells")
-    // This trainer REQUIRES a finite training cap (ADVICE r15): the
-    // deterministic Lloyd mean below materializes each sub-cell's
-    // training points in one sort_array(collect_list) aggregation
-    // buffer, so its memory bound IS the cap — the flat trainer's
-    // "<0 = full corpus" mode would let one hot cell buffer the corpus
-    // and OOM an executor where a streaming avg() could not. Default 0
-    // = the auto 64·kCells cap (the flat trainer's own auto rule).
-    require(maxTrainPoints >= 0L,
-      "trainIvfCentroidsTwoLevel needs a finite training cap: pass " +
-        "maxTrainPoints > 0, or 0 for the auto 64*kCells cap " +
-        "(the full-corpus <0 mode would unbound the per-cell " +
-        "deterministic-mean aggregation buffer)")
-    val kSuper = math.max(1, math.ceil(math.sqrt(kCells.toDouble)).toInt)
-    val supers = trainIvfCentroids(corpus, vecCol, kSuper, iters, seed,
-      maxTrainPoints)
-    val spark = corpus.sparkSession
-
-    // Training set for the sub level: same cap semantics as the flat
-    // trainer (0 = auto 64·kCells, >0 = explicit).
-    val cap = if (maxTrainPoints == 0L) 64L * kCells else maxTrainPoints
-    val base = corpus.select(col(vecCol).cast("array<double>").as("v"))
-    val nAll = base.count()
-    val train0 =
-      if (nAll > cap) base.sample(withReplacement = false,
-        fraction = cap.toDouble / nAll, seed = seed ^ 0x5eed5eedL)
-      else base
-    // Route every training point to its super-cell once (broadcast
-    // argmin, √k·d per row) and persist: every Lloyd round below and
-    // the occupancy counts scan this, not the corpus.
-    val routed = train0
-      .withColumn("superId", ivfCell(col("v"), supers))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val total = math.max(1L, routed.count())
-
-    // Proportional leaf allocation: super-cell s gets
-    // max(1, round(kCells·occupancy_s/total)) sub-centroids, clamped to
-    // its occupancy (Lloyd cannot place more centroids than points).
-    val alloc = routed.groupBy("superId")
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("kSub", greatest(lit(1L), least(col("cnt"),
-        round(col("cnt") * lit(kCells.toDouble) / lit(total.toDouble)))))
-      .select(col("superId"), col("kSub"))
-
-    // Init: the kSub_s points with the smallest seeded hash per
-    // super-cell (deterministic, uniform over the training sample).
-    val w = Window.partitionBy(col("superId"))
-      .orderBy(xxhash64(col("v").cast("string"), lit(seed)), col("v").cast("string"))
-    var subs = routed
-      .withColumn("rn", row_number().over(w))
-      .join(alloc, "superId")
-      .filter(col("rn") <= col("kSub"))
-      .select(col("superId"), (col("rn") - 1).cast("int").as("subId"),
-        col("v").as("centroid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    subs.count()
-
-    // Distributed Lloyd on the sub level: join each training point with
-    // its super-cell's sub-list (one shuffle on superId), argmin inside
-    // the list (k/√k·d per row, higher-order fold — no UDF), mean
-    // update via groupBy. Empty sub-cells keep their previous centroid
-    // (left join below), matching the flat trainer's empty-cell rule.
-    val dim = supers(0).length
-    var it = 0
-    while (it < iters) {
-      // sort_array: fixes the in-row argmin fold order so a distance
-      // tie resolves to the lowest subId deterministically (collect_list
-      // order is task-completion-dependent)
-      val lists = subs.groupBy("superId")
-        .agg(sort_array(
-          collect_list(struct(col("subId"), col("centroid")))).as("subs"))
-      val assigned = routed.join(lists, "superId")
-        .withColumn("best", aggregate(col("subs"),
-          struct(lit(Double.MaxValue).as("d"), lit(-1).as("subId")),
-          (acc, s) => {
-            val d = sqDist(col("v"), s.getField("centroid"))
-            when(d < acc.getField("d"),
-              struct(d.as("d"), s.getField("subId").as("subId")))
-              .otherwise(acc)
-          }))
-        .select(col("superId"), col("best.subId").as("subId"), col("v"))
-      // Mean update with a DETERMINISTIC summation order: a plain avg()
-      // folds partial aggregates in shuffle-fetch order, which varies
-      // run-to-run and drifts the centroid's last ulp — enough to flip
-      // boundary points and break the fixed-seed bit-determinism the
-      // rest of the dedup stack keeps (caught as a flake by
-      // HierIvfSpec's determinism pin, r15). Sorting each cell's
-      // (capped) training points first makes the fold order total;
-      // payload is bounded by the training cap, not the corpus.
-      val means = assigned.groupBy("superId", "subId")
-        .agg(sort_array(collect_list(col("v"))).as("vs"))
-        .select(col("superId"), col("subId"),
-          transform(
-            aggregate(col("vs"),
-              array_repeat(lit(0.0), dim),
-              (acc, x) => zip_with(acc, x, (a, b) => a + b)),
-            s => s / size(col("vs"))).as("newCentroid"))
-      val next = subs.join(means, Seq("superId", "subId"), "left")
-        .select(col("superId"), col("subId"),
-          coalesce(col("newCentroid"), col("centroid")).as("centroid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      subs.unpersist(false)
-      subs = next
-      it += 1
-    }
-
-    // Zero-occupancy super-cells (possible when the flat super trainer
-    // kept an empty cell's init centroid): their super centroid becomes
-    // their single leaf so downstream routing is total over superIds.
-    val present = subs.select(col("superId")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val missing = supers.indices.filterNot(present)
-    val leaves =
-      if (missing.isEmpty) subs
-      else subs.unionByName(spark.createDataFrame(
-        spark.sparkContext.parallelize(missing.map(s =>
-          org.apache.spark.sql.Row(s, 0, supers(s).toSeq)), 1),
-        subs.schema))
-    routed.unpersist(false)
-    HierIndex(supers, leaves)
-  }
-
-  /** Routed cell assignment under a two-level quantizer: stage 1 is the
-    * broadcast super argmin (√k·d per row), stage 2 a join on superId
-    * against the per-super sub-lists and an in-row argmin (k/√k·d per
-    * row). Returns `df` plus `superId`/`subId` columns — (superId,
-    * subId) is the leaf cell identity. The join side carries kSuper
-    * rows of (k/√k)·d each; Spark broadcasts it while it stays under
-    * the broadcast threshold and shuffle-joins beyond — either way the
-    * DRIVER never materializes the leaf table.
-    *
-    * `superProbe` (default 1): route via the TOP-P super-cells and take
-    * the global (distance, superId, subId) argmin over their sub-lists.
-    * P = 1 is the pure greedy route; it is route-equivalent to the flat
-    * argmin only for well-separated clusters — on the realistic σ=0.7
-    * clustered 2M fixture it loses ~35% of planted pairs to super-cell
-    * BOUNDARY STRADDLES (measured r15: pair recall 0.647 vs flat 0.995).
-    * Multi-probing the super level is the standard fix (FAISS IMI
-    * lineage): cost grows to O((√k + P·k/√k)·d) per row — still ~k/(P·√k)
-    * cheaper than flat — and P = kSuper degenerates to EXACTLY the flat
-    * argmin over the leaf set (HierIvfSpec pins this identity on
-    * arbitrary data, plus P=1 ≡ the greedy path). */
-  def assignCellsTwoLevel(df: DataFrame, vecCol: String,
-      hier: HierIndex, superProbe: Int = 1): DataFrame = {
-    val kSuper = hier.supers.length
-    require(superProbe >= 1 && superProbe <= kSuper,
-      s"superProbe must be in [1, $kSuper], got $superProbe")
-    val v = col(vecCol).cast("array<double>")
-    // sort_array fixes the in-row fold order (collect_list order is
-    // task-completion-dependent): struct sort is lexicographic on the
-    // unique subId, so a DISTANCE tie inside one super resolves to the
-    // lowest subId deterministically — the flat argmin's own tie rule.
-    val lists = hier.leaves.groupBy("superId")
-      .agg(sort_array(
-        collect_list(struct(col("subId"), col("centroid")))).as("__subs"))
-    if (superProbe == 1) {
-      df.withColumn("superId", ivfCell(v, hier.supers))
-        .join(lists, "superId")
-        .withColumn("__best", aggregate(col("__subs"),
-          struct(lit(Double.MaxValue).as("d"), lit(-1).as("subId")),
-          (acc, s) => {
-            val d = sqDist(v, s.getField("centroid"))
-            when(d < acc.getField("d"),
-              struct(d.as("d"), s.getField("subId").as("subId")))
-              .otherwise(acc)
-          }))
-        .withColumn("subId", col("__best.subId"))
-        .drop("__subs", "__best")
-    } else {
-      // Scale-safe multi-probe (VERDICT r15 what's-wrong #1): the r15
-      // form ran P separate broadcast()-hinted joins against renamed
-      // copies of `lists`, forcing FULL driver materialization of the
-      // O(k·d) leaf table — exactly the state the two-level design
-      // exists to avoid (~20 GB at the 10¹⁰-vector / k = 4·10⁷ target).
-      // This form EXPLODES the P probe candidates to rows under a
-      // synthetic row id and shuffle-joins ONCE against the distributed
-      // lists table — no broadcast hint; AQE may still pick a broadcast
-      // join when lists is genuinely small, which is a size-based
-      // runtime decision, not a forced driver materialization
-      // (HierIvfSpec pins hint-freedom on the plan). Each candidate
-      // super's sub-list folds to its local argmin in-row, then one
-      // groupBy on the row id takes the global min(d, superId, subId) —
-      // which on exact-distance ties resolves to the LOWEST (superId,
-      // subId), the flat argmin's own tie rule (the old concat-fold
-      // kept probe order instead). Per-row distance work is unchanged:
-      // O((√k + P·k/√k)·d).
-      //
-      // The original columns ride through as ONE packed struct and come
-      // back via first() per group (all P exploded copies are
-      // identical), so no self-join on the synthetic id is needed — the
-      // id only has to be unique within this single evaluation, which
-      // monotonically_increasing_id guarantees — and duplicate input
-      // rows keep their multiplicity.
-      val rowCols = df.columns.toSeq
-      val exploded = df
-        .withColumn("__row", struct(rowCols.map(col): _*))
-        .withColumn("__rowId", monotonically_increasing_id())
-        .select(col("__rowId"), col("__row"), v.as("__vec"),
-          explode(ivfCells(v, hier.supers, superProbe)).as("superId"))
-      // left join + empty-array coalesce: a probe hitting a superId
-      // absent from lists cannot happen (the trainer makes leaves total
-      // over superIds) but keeps the fold well-defined rather than
-      // dropping the row.
-      val localBest = exploded.join(lists, Seq("superId"), "left")
-        .withColumn("__cand", aggregate(
-          coalesce(col("__subs"),
-            array().cast("array<struct<subId:int,centroid:array<double>>>")),
-          struct(lit(Double.MaxValue).as("d"), lit(-1).as("subId")),
-          (acc, s) => {
-            val d = sqDist(col("__vec"), s.getField("centroid"))
-            when(d < acc.getField("d"),
-              struct(d.as("d"), s.getField("subId").as("subId")))
-              .otherwise(acc)
-          }))
-        .select(col("__rowId"), col("__row"),
-          struct(col("__cand").getField("d").as("d"), col("superId"),
-            col("__cand").getField("subId").as("subId")).as("__c"))
-      val best = localBest.groupBy("__rowId")
-        .agg(min(col("__c")).as("__best"), first(col("__row")).as("__row"))
-      best.select(rowCols.map(c => col("__row").getField(c).as(c)) ++
-        Seq(col("__best").getField("superId").as("superId"),
-          col("__best").getField("subId").as("subId")): _*)
-    }
   }
 
   /** Nearest-centroid cell id for a vector column (broadcast centroid

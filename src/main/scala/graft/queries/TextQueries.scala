@@ -69,7 +69,7 @@ object TextQueries {
     * (VERDICT r13 #6, raised from 64): 200 is q123's OWN numMerges cap,
     * so the oracled prefix now covers every merge the q123 trainer can
     * ever select and the rows-only tail is EMPTY by construction at
-    * every scale. Measured realized counts (BpeTrainProbe, r14): the
+    * every scale. Measured realized counts (docs/ROUND14.md): the
     * sf0.01 gate early-stops at 106 merges (31-word vocab — the
     * oracle's empty-m_i rows replay the stopped tail exactly), while
     * sf1 (274-word vocab) and sf10 (2,704) both hit the 200 cap — no

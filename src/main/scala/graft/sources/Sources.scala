@@ -22,10 +22,6 @@ object Sources {
       .schema(schema)
       .csv(path)
 
-  /** CSV scan with inference for small/interactive use. */
-  def readCsvInferred(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
-    spark.read.option("header", header.toString).option("inferSchema", "true").csv(path)
-
   def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 

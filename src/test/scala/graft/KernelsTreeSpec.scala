@@ -1,19 +1,19 @@
 package graft
 
-import graft.core.GlmData
+import graft.core.{GlmData, RowCursor}
 import graft.datasets.Datasets
 import graft.families.Logistic
 import graft.linalg.Kernels
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The tree-combine path of Kernels.partitionAggregate: above
+/** The tree-combine path of Kernels.partitionFold: above
   * TreeCombineThreshold partitions the per-partition partials are folded
-  * through one grouped tree level instead of a flat driver collect (the
-  * 100 TB fix — driver traffic O(√n·p²) not O(n·p²)). Contract under
-  * test: bit-identical results run-to-run at a fixed partition count
-  * (the reference's determinism requirement), agreement with the
-  * small-n path within float tolerance, and correctness of the group
-  * fold itself.
+  * in reducer runs of TreeCombineThreshold instead of a flat driver
+  * collect (the 100 TB fix — no holder sees more than 128 partials).
+  * Contract under test: bit-identical results run-to-run at a fixed
+  * partition count (the reference's determinism requirement),
+  * agreement with the small-n path within float tolerance, and
+  * partition-index order through the combine itself.
   */
 class KernelsTreeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -73,5 +73,27 @@ class KernelsTreeSpec extends AnyFunSuite {
       // labelSum is an exact integer-valued sum here → must match exactly
       assert(Kernels.labelSum(flat) == Kernels.labelSum(tree))
     } finally { flat.unpersist(); tree.unpersist() }
+  }
+
+  test("tree combine folds partials in partition-index order") {
+    val nParts = 2 * Kernels.TreeCombineThreshold + 7
+    val rows = (0 until 2 * nParts).map(i =>
+      (org.apache.spark.ml.linalg.Vectors.dense(1.0), i.toDouble))
+    val d = new GlmData(spark.sparkContext.parallelize(rows, nParts), 1,
+      isSparse = false).persist()
+    try {
+      assert(d.numPartitions > Kernels.TreeCombineThreshold)
+      val labels: RowCursor => String = { c =>
+        val sb = new StringBuilder
+        while (c.next()) sb.append(c.y.toLong).append(',')
+        sb.toString
+      }
+      val expected = d.blocks.mapPartitionsWithIndex { (idx, it) =>
+        Iterator.single((idx, labels(new RowCursor(it, 1, null, null))))
+      }.collect().sortBy(_._1).map(_._2).foldLeft("")(_ + _)
+      assert(expected == (0 until 2 * nParts).map(i => s"$i,").mkString)
+      // concatenation does not commute: any misordered merge shows
+      assert(Kernels.partitionFold(d)(labels)(_ + _) == expected)
+    } finally d.unpersist()
   }
 }

@@ -16,13 +16,11 @@ class SolversSpec extends AnyFunSuite {
   private def momentGap(data: GlmData, beta: DenseVector[Double]): Double = {
     // |Σσ(Xβ̂) − Σy| — logistic first-order condition (test_algos_families.py:54-69)
     val b = beta.toArray
-    val (pSum, ySum) = Kernels.partitionAggregate(data)(() => (0.0, 0.0))(
-      { case ((ps, ys), x, y) =>
-        var xb = 0.0
-        x.foreachActive((i, v) => xb += v * b(i))
-        (ps + 1.0 / (1.0 + math.exp(-xb)), ys + y)
-      },
-      { case ((a1, b1), (a2, b2)) => (a1 + a2, b1 + b2) })
+    val (pSum, ySum) = Kernels.partitionFold(data)({ c =>
+        var (ps, ys) = (0.0, 0.0)
+        while (c.next()) { ps += 1.0 / (1.0 + math.exp(-c.dot(b))); ys += c.y }
+        (ps, ys)
+      })({ case ((a1, b1), (a2, b2)) => (a1 + a2, b1 + b2) })
     math.abs(pSum - ySum)
   }
 

@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `trainPcaProjection` and the OPQ `correlation` pass to
   * `Kernels.orderedRddAggregate` (partition-index-ordered combines);
   * `trainPqCodebooks` had already inherited the fix transitively
-  * through `trainIvfCentroids`. These pins are HierIvfSpec-style:
-  * 5 consecutive same-seed runs, bit-compared.
+  * through `trainIvfCentroids`, which is pinned here directly too.
+  * Each pin is 5 consecutive same-seed runs, bit-compared.
   *
   * The fixtures are deliberately hostile to un-ordered folds: multiple
   * partitions under local[4] (so task completion order genuinely
@@ -39,6 +39,17 @@ class TrainerDeterminismSpec extends AnyFunSuite {
   }
 
   private val Runs = 5
+
+  test("trainIvfCentroids: 5 consecutive same-seed runs are bit-identical") {
+    val df = hostile(n = 2000, d = 8, parts = 13, seed = 29L)
+    df.persist(); df.count()
+    val runs = (1 to Runs).map(_ =>
+      Similarity.trainIvfCentroids(df, "embedding", kCells = 6, iters = 3,
+        seed = 3L).flatten.toSeq)
+    df.unpersist()
+    assert(runs.distinct.size == 1,
+      s"IVF centroids drifted across $Runs same-seed runs")
+  }
 
   test("trainPcaProjection: 5 consecutive same-seed runs are bit-identical") {
     val df = hostile(n = 2000, d = 8, parts = 13, seed = 31L)
